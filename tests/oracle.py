@@ -49,8 +49,8 @@ def compare_result(actual: pd.DataFrame, expected: pd.DataFrame) -> dict:
     """Non-asserting comparison core: the driver-mirroring contract
     (row count → schema shape → canonicalized full-value frame compare),
     shared by the test harness's :func:`compare` and
-    ``tools/selfcheck.py`` so the committed SELFCHECK artifact measures
-    the SAME contract the differential test enforces. Mutates the input
+    ``tools/selfcheck.py`` so the vanilla-session sweep measures the SAME
+    contract the differential test enforces. Mutates the input
     frames' column case (callers pass throwaway ``toPandas`` results).
     """
     a_low = sorted(c.lower() for c in actual.columns)

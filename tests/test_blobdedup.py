@@ -216,9 +216,9 @@ def test_candidates_match_oracle_on_adversarial_corpus(spark, tmp_path):
 def test_family_is_registered():
     """Flipped at the r18 freeze (was the r17 staging pin): the family
     is in the registry with its full bundle."""
-    from tfm_taxitrips_spark.queries.registry import registration_order
+    from tfm_taxitrips_spark.queries.registry import all_queries
 
-    names = set(registration_order())
+    names = set(all_queries())
     assert "blob_simhash" in names
     assert "blob_dup_candidates" in names
     for name, spec in QUERIES.items():

@@ -258,9 +258,9 @@ def test_ppm_int64_identity_in_both_engines(spark):
 
 def test_family_is_registered():
     """Flipped at the r18 freeze (was the r17 staging pin)."""
-    from tfm_taxitrips_spark.queries.registry import registration_order
+    from tfm_taxitrips_spark.queries.registry import all_queries
 
-    assert "encoding_damage_audit" in set(registration_order())
+    assert "encoding_damage_audit" in set(all_queries())
     for name, spec in QUERIES.items():
         assert callable(spec.fn), name
         assert spec.oracle and "SELECT" in spec.oracle.upper(), name

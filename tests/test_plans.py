@@ -1623,34 +1623,3 @@ def test_pack_waste_by_utilization_rides_two_exchanges(spark, sf_smoke):
     assert "CartesianProduct" not in plan
     assert "Window" in plan  # the shared _pack_layout prefix sum
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 2
-
-
-def test_plans_md_fingerprint_matches_head():
-    """PLANS.md freshness pin (r9 verdict item #5): the plan-dump
-    artifact stamps the source fingerprint at generation time exactly
-    like SELFCHECK does, and this test asserts it against HEAD — a
-    source change without a regenerated PLANS.md now fails the suite
-    instead of relying on round discipline. The dump must also cover
-    every SHOWCASE query (a registered-but-undumped headline plan is a
-    silent coverage gap)."""
-    import os
-    import re
-
-    from tools.selfcheck import source_fingerprint
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(repo, "PLANS.md")
-    assert os.path.exists(path), (
-        "no PLANS.md — run python -m tfm_taxitrips_spark.plans.dump")
-    with open(path) as fh:
-        text = fh.read()
-    m = re.search(r"Source fingerprint: `([0-9a-f]{64})`", text)
-    assert m, ("PLANS.md predates the fingerprint stamp — regenerate "
-               "with python -m tfm_taxitrips_spark.plans.dump")
-    assert m.group(1) == source_fingerprint(), (
-        "PLANS.md was generated from DIFFERENT source code — regenerate "
-        "with python -m tfm_taxitrips_spark.plans.dump")
-    from tfm_taxitrips_spark.plans.dump import SHOWCASE
-
-    dumped = set(re.findall(r"^## (\S+)$", text, flags=re.M))
-    assert dumped == set(SHOWCASE)

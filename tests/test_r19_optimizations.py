@@ -22,7 +22,10 @@ def _rows(df):
 def test_tpps_multi_equals_stacked_single_calls(spark):
     """two_phase_prefix_sums == two stacked two_phase_prefix_sum calls,
     column for column (the ks_split_drift / quantile_drift_gate rewrite),
-    including a NULL partition key and NULL values."""
+    including a NULL partition key and NULL values — and when a later
+    pair's ``val_col`` is an earlier pair's ``out_col``, every sum still
+    reads the INPUT column (the stacked reference runs in the order
+    where no call reads another's output)."""
     data = [
         ("a", 0, 1, 10, 1), ("a", 0, 2, None, 2), ("a", 1, 3, 30, None),
         (None, 0, 1, 5, 7), (None, 1, 2, 6, 8), ("b", 2, 9, 1, 1),
@@ -38,6 +41,19 @@ def test_tpps_multi_equals_stacked_single_calls(spark):
     multi = two_phase_prefix_sums(
         df, partition_cols=("p",), bucket_col="rng", order_cols=("v",),
         cols=[("x", "cx"), ("y", "cy")])
+    assert _rows(single) == _rows(multi)
+    assert [f.name for f in single.schema] == [f.name for f in multi.schema]
+
+    # colliding names: x's running sum overwrites y, while cy sums input y
+    single = two_phase_prefix_sum(
+        df, partition_cols=("p",), bucket_col="rng", order_cols=("v",),
+        val_col="y", out_col="cy")
+    single = two_phase_prefix_sum(
+        single, partition_cols=("p",), bucket_col="rng", order_cols=("v",),
+        val_col="x", out_col="y")
+    multi = two_phase_prefix_sums(
+        df, partition_cols=("p",), bucket_col="rng", order_cols=("v",),
+        cols=[("x", "y"), ("y", "cy")])
     assert _rows(single) == _rows(multi)
     assert [f.name for f in single.schema] == [f.name for f in multi.schema]
 

@@ -7,9 +7,7 @@ round's probe findings and advisory closures:
   both engines;
 - the hardened ``_emb_guard_sql`` rewriter (r11 advisory #2):
   case-insensitive scan matching, whitespace-tolerant ``WITH
-  RECURSIVE`` detection, and a loud failure when no scan matched;
-- the ``tools.symbols`` leftover-binding edge (r11 advisory #1): edits
-  to a name bound inside top-level control flow must stale its users.
+  RECURSIVE`` detection, and a loud failure when no scan matched.
 """
 
 from __future__ import annotations
@@ -996,36 +994,3 @@ def test_bpe_training_caps_overlong_words(spark, tmp_path):
     # the overlong z-run would dominate every pair count were it not
     # excluded — the learned merges must come from the real words
     assert not any("z" in str(l) for l in actual["lhs"])
-
-
-def test_symbols_leftover_bound_names_edge_to_module_sym():
-    """r11 advisory #1, failing-first before the fix: a constant bound
-    by top-level control flow (try/except, if) pools into <module>, and
-    its REFERENCING symbols must edge there — editing the block must
-    stale the users, preserving the module's 'extra staleness, never
-    missed' guarantee."""
-    from tools.symbols import (
-        changed_symbols,
-        closure,
-        index_files,
-        symbol_graph,
-    )
-
-    path = os.path.join("tfm_taxitrips_spark", "queries", "fake.py")
-    old = {path: (
-        "try:\n    SPEED = 1\nexcept Exception:\n    SPEED = 2\n"
-        "\n"
-        "def q_user(spark, sf_dir):\n    return SPEED\n"
-        "\n"
-        "def q_unrelated(spark, sf_dir):\n    return 7\n"
-    )}
-    new = {path: old[path].replace("SPEED = 1", "SPEED = 10")}
-
-    ch = changed_symbols(old, new)
-    assert ch == {(path, "<module>")}
-
-    graph = symbol_graph(index_files(old))
-    user_closure = closure(graph, {(path, "q_user")})
-    assert (path, "<module>") in user_closure          # the fixed edge
-    other = closure(graph, {(path, "q_unrelated")})
-    assert (path, "<module>") not in other             # no blanket edge

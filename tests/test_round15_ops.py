@@ -1,8 +1,7 @@
 """Round-15 operator tests: exact-Python replays + NULL probes for
 `source_prune_plan` (the containment matrix's decision layer) and
 `debounce_episode_audit` (the debounce policy's episode histogram),
-plus the cross-operator reconciliations each one exists to honor, and
-the FRONTED planner mechanism pin (r14 ADVICE #3).
+plus the cross-operator reconciliations each one exists to honor.
 """
 
 from __future__ import annotations
@@ -244,97 +243,3 @@ def test_debounce_audit_reconciles_with_dedup_totals(spark, tmp_path):
     dedup = qs["stream_dedup_debounce"].fn(spark, str(tmp_path)).toPandas()
     assert int(audit["n_episodes"].sum()) == int(dedup["n_admitted"].sum())
     assert int(audit["n_events"].sum()) == int(dedup["n_events"].sum())
-
-
-# --------------------------------------------------------------------------
-# FRONTED planner mechanism (r14 ADVICE #3)
-# --------------------------------------------------------------------------
-
-
-def test_rotation_planner_honors_fronted(monkeypatch):
-    """The committed GRADING_PRIORITY must be planner output VERBATIM:
-    registry.FRONTED is part of the planner's input, so a window frozen
-    with fronted changed-queries is mechanically reproducible. Pin the
-    contract: FRONTED names lead the window in FRONTED order, ahead of
-    the never-graded class, without duplication; unknown names are
-    ignored."""
-    from tfm_taxitrips_spark.queries import registry, rotation
-
-    # the baseline ranking must itself be FRONTED-free, else the live
-    # registry FRONTED (non-empty since r16) sits at its head and the
-    # shifted-order comparison below compares two different mechanisms
-    monkeypatch.setattr(registry, "FRONTED", ())
-    baseline = [n for n, _r, _s in rotation.plan(50)]
-    fronted = (baseline[40], baseline[10], "no_such_query")
-    monkeypatch.setattr(registry, "FRONTED", fronted)
-    rows = [n for n, _r, _s in rotation.plan(50)]
-    assert rows[:2] == [baseline[40], baseline[10]]
-    assert "no_such_query" not in rows
-    assert len(rows) == len(set(rows)) == 50
-    # everything else keeps the ranking order, shifted
-    rest = [n for n in baseline if n not in fronted]
-    assert rows[2:] == rest[:48]
-
-
-def test_committed_window_is_planner_verbatim(monkeypatch):
-    """The current freeze itself: GRADING_PRIORITY equals the live
-    planner output at the current tree (CORRECTNESS files + round
-    markers + FRONTED), so the committed tuple carries no manual
-    reordering a regeneration could drop.
-
-    r15 ADVICE #1: the disarm gate reads `git ls-files` (files tracked
-    at HEAD), NOT a working-tree glob — the driver drops its grading
-    artifact into the working tree BEFORE the round's artifact commit,
-    and an untracked CORRECTNESS_r{N}.json must not silently disable
-    the pin for the whole post-freeze window. The pin disarms only
-    once a from-this-round-or-later CORRECTNESS file is COMMITTED (the
-    next round has started; its freeze bumps _FREEZE_ROUND to re-arm).
-    While the newer file is merely untracked, the pin still RUNS: the
-    planner's glob input is filtered back to the freeze-time rounds
-    (the planner docstring's own re-derivation rule — 'the next
-    round's file must be ignored'), reproducing the frozen inputs
-    without moving files aside."""
-    import os
-    import re
-    import subprocess
-
-    import pytest
-
-    from tfm_taxitrips_spark.queries import registry, rotation
-
-    _FREEZE_ROUND = 18
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if rotation._round_markers(repo) is None:
-        pytest.skip("git round markers unavailable")
-    try:
-        tracked = subprocess.run(
-            ["git", "-C", repo, "ls-files", "CORRECTNESS_r*.json"],
-            check=True, capture_output=True, text=True).stdout.split()
-    except (OSError, subprocess.CalledProcessError):
-        pytest.skip("git ls-files unavailable")
-    if any((m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-           and int(m.group(1)) >= _FREEZE_ROUND for p in tracked):
-        pytest.skip("freeze predates newer COMMITTED CORRECTNESS input")
-
-    import glob
-    import json
-
-    def frozen_inputs(repo_root):
-        # drop rounds the freeze could not have seen (e.g. the driver's
-        # untracked grading artifact for THIS round): re-derivation
-        # must ignore them, per the planner docstring
-        latest: dict[str, int] = {}
-        for path in glob.glob(
-                os.path.join(repo_root, "CORRECTNESS_r*.json")):
-            mm = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-            if mm is None or int(mm.group(1)) >= _FREEZE_ROUND:
-                continue
-            with open(path) as fh:
-                for name in json.load(fh):
-                    latest[name] = max(latest.get(name, 0),
-                                       int(mm.group(1)))
-        return latest
-
-    monkeypatch.setattr(rotation, "latest_graded_round", frozen_inputs)
-    rows = [n for n, _r, _s in rotation.plan(50)]
-    assert tuple(rows) == registry.GRADING_PRIORITY

@@ -212,7 +212,7 @@ def test_star_guard_cte_unblocks_a_sweep_crashing_oracle(
     from tfm_taxitrips_spark.queries import sqlsuite
     from tfm_taxitrips_spark.queries.guards import guarded_scan_sql
 
-    # the MODULE-level (pre-merge) oracle: registry._merged now applies
+    # the MODULE-level (pre-merge) oracle: registry.all_queries now applies
     # the star CTE itself, so the registered oracle no longer crashes —
     # this test keeps proving the CTE is what fixes the raw one
     oracle = sqlsuite.QUERIES["sql_q1_pricing_summary"].oracle

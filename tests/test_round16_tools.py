@@ -1,65 +1,11 @@
-"""Round-16 tooling + seam pins.
-
-The r16 contract batch introduced two mechanisms whose FAILURE modes
-matter more than their happy paths: the round gate's batch-round
-coverage rule (a stale row outside the frozen window may be excused
-ONLY by a green full-registry selfcheck at exactly the current tree
-fingerprint — never by a stale or failing sweep), and the widened
-events guard (±inf event values now rebuild to NULL like NaN, through
-the ONE shared ``contracts.star_guard`` projection). Pinned here
-because the expensive proofs (the non-finite sweep, the full
-selfcheck) run from the round checklist, not pytest.
+"""Round-16 seam pins: the widened events guard (±inf event values now
+rebuild to NULL like NaN, through the ONE shared ``contracts.star_guard``
+projection), checked on the Spark side and against its DuckDB oracle twin.
 """
 
 from __future__ import annotations
 
-import json
 import math
-import os
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def test_gate_selfcheck_coverage_requires_exact_fingerprint(tmp_path,
-                                                            monkeypatch):
-    """`_selfcheck_green_rows` excuses nothing unless the NEWEST
-    selfcheck artifact is (a) at exactly the asked-for fingerprint and
-    (b) failure-free — a stale sweep, a failing sweep, or a green
-    older-round sweep beside a newer stale one must all return the
-    EMPTY set, so the rotation invariant can never be satisfied by
-    yesterday's evidence."""
-    from tools import round_gate
-
-    monkeypatch.setattr(round_gate, "REPO", str(tmp_path))
-
-    def write(round_no: int, fp: str, n_fail: int, rows) -> None:
-        data = {r: {"hash_match": True} for r in rows}
-        data["__meta__"] = {"fingerprint": fp, "n_fail": n_fail,
-                            "n_queries": len(rows)}
-        with open(tmp_path / f"SELFCHECK_r{round_no}.json", "w") as fh:
-            json.dump(data, fh)
-
-    # no artifact at all
-    assert round_gate._selfcheck_green_rows("f" * 8) == set()
-    # green at the right fingerprint: rows covered
-    write(16, "f" * 8, 0, ["alpha", "beta"])
-    assert round_gate._selfcheck_green_rows("f" * 8) == {"alpha", "beta"}
-    # wrong fingerprint: nothing covered
-    assert round_gate._selfcheck_green_rows("0" * 8) == set()
-    # a NEWER artifact at a stale fingerprint shadows the older green
-    # one — only the newest counts, so rot cannot hide behind history
-    write(17, "stale", 0, ["alpha", "beta", "gamma"])
-    assert round_gate._selfcheck_green_rows("f" * 8) == set()
-    # newest at the right fingerprint but with failures: nothing covered
-    write(18, "f" * 8, 2, ["alpha", "beta"])
-    assert round_gate._selfcheck_green_rows("f" * 8) == set()
-    # an artifact that doesn't SAY it is failure-free fails closed: a
-    # right-fingerprint sweep with NO n_fail key covers nothing
-    data = {"alpha": {"hash_match": True},
-            "__meta__": {"fingerprint": "f" * 8, "n_queries": 1}}
-    with open(tmp_path / "SELFCHECK_r19.json", "w") as fh:
-        json.dump(data, fh)
-    assert round_gate._selfcheck_green_rows("f" * 8) == set()
 
 
 def test_events_guard_nulls_all_non_finite_values(spark):

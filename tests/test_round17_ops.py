@@ -266,17 +266,6 @@ def test_parquet_layout_audit_footer_stats_equal_truth(spark, sf_smoke):
         assert g["stats_min"] == t["mn"] and g["stats_max"] == t["mx"], bkt
 
 
-def test_layout_audit_is_eager_and_excluded_from_showcase():
-    """The query EXECUTES a write (sinkq's eager contract) — it must
-    stay out of the lazy-plan SHOWCASE set, while the two lazy round-17
-    queries are showcased."""
-    from tfm_taxitrips_spark.plans.dump import SHOWCASE
-
-    assert "parquet_layout_audit" not in SHOWCASE
-    assert "url_dedup_gate" in SHOWCASE
-    assert "watermark_lateness_audit" in SHOWCASE
-
-
 def test_audit_parquet_footers_empty_list_returns_empty(spark):
     """paths=[] must return an empty, correctly-typed frame instead of
     tripping Spark's repartition(0) rejection (review finding)."""

@@ -1,17 +1,6 @@
-"""The non-finite ingest contract (staged r15, WIRED r16): allowlist +
-the Spark/DuckDB guard pair, deliberately OUTSIDE :mod:`schemas`.
-
-Placement note (round 15, the churn rule in action): this belongs
-conceptually next to ``schemas.DRIVER_TABLES``, but every query's
-symbol closure carries a ``(schemas.py, "*")`` module-object wildcard,
-so ADDING even an unused name to ``schemas.py`` re-stales the entire
-rotation registry (measured before landing: 224/226 rows — the exact
-append-stales-everything failure the symbol-level planner exists to
-avoid, resurfacing through the wildcard edge). A NEW module intersects
-no existing closure, so staging the data here costs zero re-stales;
-when the r16 wiring lands in ``sources/readers.py`` (whose edit
-re-stales everything anyway), the allowlist simply stays here as the
-one shared definition.
+"""The non-finite ingest contract: allowlist + the Spark/DuckDB guard
+pair, kept OUTSIDE :mod:`schemas` as the one shared definition that
+``sources/readers.py`` and the query registry both import.
 """
 
 from __future__ import annotations
@@ -21,9 +10,8 @@ from __future__ import annotations
 #: NaN/±inf on the wire and that the loader seam rebuilds to NULL in
 #: BOTH engines (the ``events.value`` NaN-guard precedent, widened to
 #: NOT-finite). Integer keys and dates cannot carry non-finite values
-#: and stay untouched. Staged as data-only at r15; WIRED at r16 as the
-#: ONE shared-seam batch against the zeroed rotation queue
-#: (ROUND15_NOTES §13 rehearsal): ``sources.readers.table()`` applies
+#: and stay untouched. Staged as data-only at r15; WIRED at r16:
+#: ``sources.readers.table()`` applies
 #: :func:`star_guard` (and ``events_guard`` routes through it), while
 #: ``registry._guard_ingest_oracles`` auto-applies
 #: :func:`star_guard_cte` to every star-scanning oracle. The non-finite

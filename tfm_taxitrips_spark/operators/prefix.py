@@ -130,13 +130,19 @@ def two_phase_prefix_sums(
     for c in keys:
         leg = df[c].eqNullSafe(F.col(f"_tpps_k_{c}"))
         cond = leg if cond is None else (cond & leg)
-    out = df.join(F.broadcast(off_r), cond).drop(
-        *[f"_tpps_k_{c}" for c in keys]
-    )
-    for i, (val_col, out_col) in zip(idx, cols):
-        out = out.withColumn(
-            out_col,
+    out = df.join(F.broadcast(off_r), cond)
+    # ONE select over the joined frame: every sum reads the INPUT
+    # ``val_col`` even when an earlier pair's ``out_col`` shares its name
+    # (a withColumn chain would sum the earlier running sum instead). An
+    # ``out_col`` naming an input column replaces it in place; new ones
+    # are appended in ``cols`` order.
+    sums = {
+        out_col: (
             F.col(f"_tpps_off_{i}")
-            + F.coalesce(F.sum(val_col).over(w_loc), F.lit(0)),
-        )
-    return out.drop(*[f"_tpps_off_{i}" for i in idx])
+            + F.coalesce(F.sum(val_col).over(w_loc), F.lit(0))
+        ).alias(out_col)
+        for i, (val_col, out_col) in zip(idx, cols)
+    }
+    return out.select(
+        *[sums.pop(c, F.col(c)) for c in df.columns], *sums.values()
+    )

@@ -7,14 +7,6 @@ web-crawl near-dup construction) over stride-sampled byte 4-grams of the
 payload, then an LSH band join over 4×15-bit bands — candidates only
 ever meet through a shared band bucket, never an all-pairs product.
 
-Staging history (the r15 ``star_guard`` / r16 ``boilerplate``
-precedent): built + fully tested in r17 AFTER that round's window
-froze — registering then would have created never-graded rows and
-broken the rotation invariant — so the module sat complete but outside
-``registry._merged()`` for one round, pinned by a staging test. The
-r18 freeze flipped the import and the pin; the planner fronts both
-rows as never-graded class 0.
-
 Scale design (100 TB):
 
 - **Signature is in-row, shuffle-free.** Windows, hashes, and the

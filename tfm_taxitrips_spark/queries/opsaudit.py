@@ -474,7 +474,7 @@ def q_parquet_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     EAGER CONTRACT (the sinkq family's): calling this function writes a
     throwaway dataset, runs the footer audit, and materializes the
     ≤tens-of-rows result before the dir is removed — excluded from
-    SHOWCASE / bench for that reason.
+    bench for that reason.
 
     r18 (guide §1.2/§6): the bucketed dataset is CALL-SCOPED scratch
     (written, footer-read, deleted inside this function), so it goes

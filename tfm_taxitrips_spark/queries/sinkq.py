@@ -16,9 +16,9 @@ K5 single-file CSV:     /root/reference/AreasLoc.py:79-80
 
 EAGER CONTRACT — unlike every other registered query, calling a q_sink_*
 function EXECUTES work (writes a sink, drains a stream, collects the
-aggregate) rather than returning a lazy plan. Plan-dump / explain / bench
-tooling must not call these for plan inspection — they are excluded from
-SHOWCASE and from bench.py's headline set for exactly this reason; the
+aggregate) rather than returning a lazy plan. Explain / bench tooling
+must not call these for plan inspection — they are excluded from
+bench.py's headline set for exactly this reason; the
 DataFrame they return is a small materialized result re-wrapped for the
 driver compare.
 """

@@ -362,7 +362,7 @@ def events_guard(df: DataFrame) -> DataFrame:
     """The telemetry ingest contract for the ``events`` table (r12, found
     by the registry-wide adversarial sweep, ``tools/null_probe_sweep.py``)
     — the events analog of the vector family's ``emb_table`` seam, with
-    the oracle twin auto-applied in ``registry._merged``:
+    the oracle twin auto-applied in ``registry.all_queries``:
 
     - **a NULL ``ts`` row is excluded**: an event without a time cannot
       be windowed — watermarked Structured Streaming silently DROPS such

@@ -1,18 +1,13 @@
-"""Same-host paired A/B bench — the r16 verdict's order #4: the bench
-meter publishes per-query spread within a run, but cross-ROUND moves
-still had to be adjudicated against five rounds of history to separate
-code regressions from host drift. This tool removes that blind spot
-with one artifact: it checks the PREVIOUS round's HEAD (the latest
-``round N: verdict`` marker commit) into a throwaway git worktree and
-runs that tree's own ``bench.py`` and the current tree's ``bench.py``
-back-to-back, interleaved A/B/A/B on the same host — so every paired
-delta has the host conditions in common and a real regression separates
-from drift without any normalization model.
+"""Same-host paired A/B bench: checks a base commit into a throwaway git
+worktree and runs that tree's own ``bench.py`` and the current tree's
+``bench.py`` back-to-back, interleaved A/B/A/B on the same host — so
+every paired delta has the host conditions in common and a real
+regression separates from drift without any normalization model.
 
-Run: ``python tools/bench_ab.py rNN [--base <commit>] [--reps N]``
-(reps default 2 → 4 bench invocations). Writes ``BENCH_AB_rNN.json``:
-per-query base/head medians over the interleaved reps, the paired
-delta, and the tree identities. Queries are compared on the
+Run: ``python tools/bench_ab.py <base-commit> [--reps N]`` (reps default
+2 → 4 bench invocations). Prints one JSON line on stdout: per-query
+base/head medians over the interleaved reps, the paired delta, and the
+tree identities; progress goes to stderr. Queries are compared on the
 INTERSECTION of the two trees' headline sets (new registrations have no
 base leg by construction — they are listed, not silently dropped).
 """
@@ -27,7 +22,6 @@ import tempfile
 from statistics import median
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
 
 LEG_TIMEOUT_S = 1800
 
@@ -37,20 +31,6 @@ def _git(*args: str, cwd: str = REPO) -> str:
         ["git", "-C", cwd, *args],
         check=True, capture_output=True, text=True,
     ).stdout
-
-
-def latest_marker() -> tuple[int, str]:
-    """(round, sha) of the newest ``round N: verdict`` marker commit —
-    via the rotation planner's ``_round_markers`` (ONE parser of the
-    marker convention; a private re-implementation here would silently
-    keep matching old subjects if the convention ever moved)."""
-    from tfm_taxitrips_spark.queries.rotation import _round_markers
-
-    markers = _round_markers(REPO)
-    if not markers:
-        sys.exit("no round markers found — pass --base <commit>")
-    rnd = max(markers)
-    return rnd, markers[rnd]
 
 
 def run_bench(tree: str) -> dict:
@@ -63,7 +43,7 @@ def run_bench(tree: str) -> dict:
         )
     except subprocess.TimeoutExpired:
         sys.exit(f"bench leg in {tree} exceeded {LEG_TIMEOUT_S}s — "
-                 "hung Spark session? No artifact written.")
+                 "hung Spark session?")
     if res.returncode != 0:
         sys.exit(f"bench leg failed in {tree}:\n{res.stderr[-2000:]}")
     # r17 ADVICE #2: a stray log line starting with '{' (or a
@@ -88,27 +68,15 @@ def run_bench(tree: str) -> dict:
 
 def main() -> None:
     args = list(sys.argv[1:])
-    base_ref: str | None = None
     reps = 2
-    if "--base" in args:
-        i = args.index("--base")
-        base_ref = args[i + 1]
-        del args[i:i + 2]
     if "--reps" in args:
         i = args.index("--reps")
         reps = int(args[i + 1])
         del args[i:i + 2]
-    if not args or not args[0].startswith("r"):
-        sys.exit("usage: python tools/bench_ab.py rNN "
-                 "[--base <commit>] [--reps N]")
-    tag = args[0]
-
-    if base_ref is None:
-        base_round, base_sha = latest_marker()
-        base_label = f"round {base_round} marker"
-    else:
-        base_sha = _git("rev-parse", base_ref).strip()
-        base_label = base_ref
+    if len(args) != 1:
+        sys.exit("usage: python tools/bench_ab.py <base-commit> [--reps N]")
+    base_label = args[0]
+    base_sha = _git("rev-parse", base_label).strip()
     head_sha = _git("rev-parse", "HEAD").strip()
     dirty = bool(_git("status", "--porcelain",
                       "--untracked-files=no").strip())
@@ -119,9 +87,9 @@ def main() -> None:
         base_runs: list[dict] = []
         head_runs: list[dict] = []
         for rep in range(reps):
-            print(f"rep {rep + 1}/{reps}: base leg …", flush=True)
+            print(f"rep {rep + 1}/{reps}: base leg …", file=sys.stderr)
             base_runs.append(run_bench(wt))
-            print(f"rep {rep + 1}/{reps}: head leg …", flush=True)
+            print(f"rep {rep + 1}/{reps}: head leg …", file=sys.stderr)
             head_runs.append(run_bench(REPO))
     finally:
         _git("worktree", "remove", "--force", wt)
@@ -162,13 +130,7 @@ def main() -> None:
         "per_query": per_query,
         "sf": head_runs[0].get("sf"),
     }
-    out = os.path.join(REPO, f"BENCH_AB_{tag}.json")
-    with open(out, "w") as fh:
-        json.dump(payload, fh, indent=1)
-    print(json.dumps({k: payload[k] for k in (
-        "metric", "shared_total_base_sec", "shared_total_head_sec",
-        "shared_total_delta_pct", "head_only_queries")}))
-    print(f"wrote {out}")
+    print(json.dumps(payload))
 
 
 if __name__ == "__main__":

@@ -3,9 +3,9 @@
 
 For every ``bench=True`` query (or ``--only a,b``): time DataFrame
 *construction* (driver-side: readers, view registration, plan build)
-separately from *execution* (noop sink, guide §1.4), capture
-``.explain('formatted')`` to ``plans/r18/<name>_<tag>.txt``, and print a
-per-query table plus one JSON line.
+separately from *execution* (noop sink, guide §1.4), count exchanges,
+joins and Python operators in ``.explain('formatted')``, and print a
+per-query table plus one JSON line. Writes nothing.
 
 Run: ``python tools/profile_bench.py <tag> [--only a,b] [--reps N] [--all]``
 """
@@ -47,10 +47,6 @@ def main() -> None:
         n: s for n, s in all_queries().items()
         if (s.bench or include_all) and (only is None or n in only)
     }
-
-    plans_dir = os.path.join(
-        REPO, "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r19"))
-    os.makedirs(plans_dir, exist_ok=True)
 
     # one warm pass (untimed): JIT + file-listing caches
     for name in sorted(specs):
@@ -94,8 +90,6 @@ def main() -> None:
         df = specs[name].fn(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
-        with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as fh:
-            fh.write(plan)
         n_exch = plan.count("Exchange")
         rows.append({
             "name": name,
@@ -126,8 +120,7 @@ def main() -> None:
     print(f"{'TOTAL':32s} {total_build:7.3f} {total_run:7.3f}")
     out = {"tag": tag, "sf_dir": sf_dir, "reps": reps,
            "total_build": total_build, "total_run": total_run, "rows": rows}
-    with open(os.path.join(REPO, f"profile_{tag}.json"), "w") as fh:
-        json.dump(out, fh, indent=1)
+    print(json.dumps(out))
 
 
 if __name__ == "__main__":

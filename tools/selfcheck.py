@@ -1,31 +1,20 @@
-"""Full-registry driver simulation → SELFCHECK_r{N}.json.
+"""Full-registry sweep on a vanilla SparkSession, Spark vs DuckDB.
 
-Replicates the grading driver's per-query check (row count + schema +
-order-insensitive value hash, Spark vs DuckDB at sf0.01) over EVERY
-registered query — not just the 50-slot grading window — on a VANILLA
-SparkSession (the driver brings its own, with none of our session-factory
-confs). The committed JSON mirrors the CORRECTNESS_r*.json schema so the
-judge has a machine-checkable signal for the queries outside the window
-(r4 verdict item #4).
+Runs every registered query through the ``__spark_entry__`` contract on a
+plain ``SparkSession.builder`` session (none of the engine's
+session-factory confs) and compares each result with its DuckDB oracle
+(row count + schema + order-insensitive value hash, the same core as
+``tests/oracle.compare``). ``tests/test_differential.py`` covers the
+engine session at sf0.001; this covers the vanilla session at a larger
+scale.
 
-Run: ``python tools/selfcheck.py [round_tag] [sf_dir] [--only a,b,c]``
-
-``--only`` (r7 verdict advisory: the ~4-5 min full sweep serializes
-small commits) re-verifies ONLY the named queries and splices them into
-the existing same-tag artifact, recomputing the global fingerprint. The
-splice is sound exactly when the code delta since the base artifact
-touches nothing the un-rerun queries execute — the tool cannot prove
-that (the fingerprint is global by design), so it (a) refuses unless the
-base artifact's query set matches the current registry, and (b) records
-the splice provenance (``__meta__.incremental``: re-verified names +
-the base fingerprint) so a reviewer can audit the claim against the
-diff. When in doubt — any shared-helper, oracle-harness, or registry
-change — run the full sweep.
+Run: ``python tools/selfcheck.py [sf_dir]`` (default: the sf0.01 fixture,
+``tests/conftest.SF_CORRECT``). Prints one status line per query and
+exits 1 if any query failed. Writes nothing.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
@@ -34,195 +23,24 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-#: fingerprinted files OUTSIDE the package: the driver shim and the
-#: comparison harness itself. Any change here invalidates EVERY record
-#: (compare semantics / registry wiring), so a splice refuses on them.
-_HARNESS_FILES = (
-    "__spark_entry__.py",
-    os.path.join("tests", "oracle.py"),
-    os.path.join("tools", "selfcheck.py"),
-)
-
-
-def source_file_hashes(repo: str = REPO) -> dict[str, str]:
-    """Per-file sha256 of every source file a query result can depend on
-    (repo-relative path → hex digest). The per-file granularity is what
-    lets a ``--only`` splice PROVE its admissibility (ADVICE r8): the
-    tool diffs these against the base artifact's recorded hashes and
-    maps each changed file onto the queries whose import closure reaches
-    it."""
-    import hashlib
-
-    paths = [os.path.join(repo, p) for p in _HARNESS_FILES]
-    pkg = os.path.join(repo, "tfm_taxitrips_spark")
-    for root, _dirs, files in os.walk(pkg):
-        paths.extend(
-            os.path.join(root, f) for f in files if f.endswith(".py"))
-    out = {}
-    for p in sorted(paths):
-        with open(p, "rb") as fh:
-            out[os.path.relpath(p, repo)] = hashlib.sha256(fh.read()).hexdigest()
-    return out
-
-
-def source_fingerprint(repo: str = REPO) -> str:
-    """Stable hash over every source file a query result can depend on —
-    the whole ``tfm_taxitrips_spark`` package plus ``__spark_entry__.py``.
-    Recorded in the artifact's ``__meta__`` and asserted against current
-    code by ``tests/test_differential.py``, so changing an existing
-    query's implementation (not just the registry's name set) forces a
-    regenerated artifact (ADVICE r5). Module-granular on purpose: query
-    fns share helpers across modules, so per-function source hashing
-    would under-approximate the dependency set. The comparison harness
-    itself (tests/oracle.py) and this tool are included too (ADVICE r6):
-    artifact contents depend on compare semantics, so a harness change
-    must also invalidate a committed artifact. (Derived from
-    :func:`source_file_hashes`; the combined digest is unchanged from the
-    pre-r9 definition.)
-    """
-    import hashlib
-
-    h = hashlib.sha256()
-    for rel, hexd in source_file_hashes(repo).items():
-        h.update(rel.encode())
-        h.update(bytes.fromhex(hexd))
-    return h.hexdigest()
-
-
-def _import_graph(repo: str = REPO) -> dict[str, set[str]]:
-    """Static intra-package import graph: repo-relative file → set of
-    repo-relative package files it imports (module-granular, found by
-    ``ast`` walk so function-local imports count). Used to compute which
-    queries a changed file can possibly affect."""
-    import ast
-
-    hashes = source_file_hashes(repo)
-    pkg_files = [p for p in hashes if p.startswith("tfm_taxitrips_spark")]
-    mod_to_path: dict[str, str] = {}
-    for p in pkg_files:
-        mod = p[:-3].replace(os.sep, ".")
-        if mod.endswith(".__init__"):
-            mod = mod[: -len(".__init__")]
-        mod_to_path[mod] = p
-
-    def resolve(mod: str) -> str | None:
-        while mod:
-            if mod in mod_to_path:
-                return mod_to_path[mod]
-            mod = mod.rpartition(".")[0]
-        return None
-
-    graph: dict[str, set[str]] = {}
-    for p in pkg_files:
-        deps: set[str] = set()
-        with open(os.path.join(repo, p)) as fh:
-            tree = ast.parse(fh.read())
-        pkg_of_file = p[:-3].replace(os.sep, ".").rpartition(".")[0]
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Import):
-                for a in node.names:
-                    d = resolve(a.name)
-                    if d:
-                        deps.add(d)
-            elif isinstance(node, ast.ImportFrom):
-                base = node.module or ""
-                if node.level:  # relative import
-                    parts = pkg_of_file.split(".")
-                    parts = parts[: len(parts) - (node.level - 1)]
-                    base = ".".join(parts + ([base] if base else []))
-                for a in node.names:
-                    d = resolve(f"{base}.{a.name}") or resolve(base)
-                    if d:
-                        deps.add(d)
-        deps.discard(p)
-        graph[p] = deps
-    # The registry imports EVERY query module to build the name→fn map —
-    # registration (name-binding) edges, not data dependencies. Left in,
-    # they put the whole package in every query's closure and collapse
-    # the analysis to "everything affects everything". They are dropped
-    # here, and a change to a registration hub itself instead REFUSES
-    # the splice outright (_REGISTRATION_HUBS below) — the conservative
-    # direction, and the standing rule anyway (registry change ⇒ full
-    # sweep).
-    for hub in _REGISTRATION_HUBS:
-        graph[hub] = set()
-    return graph
-
-
-#: files whose change always forces a full sweep: they wire names to
-#: fns / order the registry rather than compute results, so the closure
-#: analysis deliberately blinds itself to them (see _import_graph)
-_REGISTRATION_HUBS = (
-    os.path.join("tfm_taxitrips_spark", "queries", "registry.py"),
-    os.path.join("tfm_taxitrips_spark", "queries", "rotation.py"),
-    os.path.join("tfm_taxitrips_spark", "queries", "__init__.py"),
-)
-
-
-def affected_queries(changed: set[str], repo: str = REPO) -> set[str] | None:
-    """The set of registered queries whose TRANSITIVE import closure
-    reaches any file in ``changed`` — i.e. every query a splice must
-    re-verify for that diff. Returns ``None`` (= everything / refuse the
-    splice) when a harness file or registration hub changed, or a
-    changed file falls outside the known graph."""
-    if any(p in changed for p in _HARNESS_FILES + _REGISTRATION_HUBS):
-        return None
-    graph = _import_graph(repo)
-    if not changed <= set(graph):
-        return None
-    import __spark_entry__ as entry_mod  # noqa: F401 — ensures sys.path
-
-    from tfm_taxitrips_spark.queries.registry import all_queries
-
-    closures: dict[str, set[str]] = {}
-
-    def closure(start: str) -> set[str]:
-        if start not in closures:
-            seen = {start}
-            stack = [start]
-            while stack:
-                for d in graph.get(stack.pop(), ()):
-                    if d not in seen:
-                        seen.add(d)
-                        stack.append(d)
-            closures[start] = seen
-        return closures[start]
-
-    out = set()
-    for name, spec in all_queries().items():
-        mod = spec.fn.__module__.replace(".", os.sep) + ".py"
-        if changed & closure(mod):
-            out.add(name)
-    return out
-
-
 def failed(rec: dict) -> bool:
-    """One definition of per-query failure, shared with the lockstep test:
-    an oracle miss, any error, or — for rows-only queries — a silently
-    empty result (ADVICE r5: zero rows must not pass as 'SKIP')."""
+    """One definition of per-query failure: an oracle miss, any error,
+    or — for rows-only queries — a silently empty result (zero rows must
+    not pass as 'SKIP')."""
     if rec["hash_match"] is None:  # rows-only (no oracle)
         return not rec["spark_rows"]
     return rec["hash_match"] is False or bool(rec["err"])
 
 
 def main() -> None:
-    # The round tag is REQUIRED (r6 verdict item: a hardcoded default
-    # silently overwrites the previous round's artifact).
-    args = list(sys.argv[1:])
-    only: list[str] | None = None
-    if "--only" in args:
-        i = args.index("--only")
-        try:
-            only = [n for n in args[i + 1].split(",") if n]
-        except IndexError:
-            sys.exit("--only requires a comma-separated query-name list")
-        del args[i:i + 2]
-    if not args or not args[0].startswith("r"):
-        sys.exit("usage: python tools/selfcheck.py rNN [sf_dir] [--only a,b]")
-    tag = args[0]
-    sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.01"
+    if len(sys.argv) > 2:
+        sys.exit("usage: python tools/selfcheck.py [sf_dir]")
 
     from pyspark.sql import SparkSession
+
+    from tests.conftest import SF_CORRECT
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else SF_CORRECT
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -236,72 +54,18 @@ def main() -> None:
     import __spark_entry__ as entry_mod
     from tests.oracle import compare_result, duck_connection
 
-    # Fingerprint BEFORE the sweep: the artifact must describe the code
-    # that PRODUCED the results. If a source file changes while the sweep
-    # runs, the end-of-run check below refuses to write a stamped-but-
-    # stale artifact instead of silently mixing code states.
-    fp_start = source_fingerprint()
-
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
 
-    results: dict[str, dict] = {}
-    base_meta: dict | None = None
-    out = os.path.join(REPO, f"SELFCHECK_{tag}.json")
-    if only is not None:
-        unknown = sorted(set(only) - set(qs))
-        if unknown:
-            sys.exit(f"--only names not in the registry: {unknown}")
-        if not os.path.exists(out):
-            sys.exit(f"--only needs an existing {os.path.basename(out)} to "
-                     "splice into — run the full sweep first")
-        with open(out) as fh:
-            base = json.load(fh)
-        base_meta = base.pop("__meta__", None)
-        if base_meta is None or set(base) != set(qs):
-            sys.exit("base artifact's query set doesn't match the current "
-                     "registry — a splice can't cover added/removed "
-                     "queries; run the full sweep")
-        # preserve the base artifact's records (and sf_dir consistency)
-        if base_meta.get("sf_dir") != sf_dir:
-            sys.exit(f"base artifact used sf_dir={base_meta.get('sf_dir')} "
-                     f"— splicing {sf_dir} results would mix scales")
-        # ADMISSIBILITY (ADVICE r8): a splice is sound only if the code
-        # delta since the base artifact cannot affect any un-rerun query.
-        # Diff the base artifact's per-file hashes against the working
-        # tree and map every changed file onto the queries whose import
-        # closure reaches it; refuse unless that set is covered by
-        # --only. This replaces the manual reviewer audit with a
-        # machine check — harness-file changes refuse outright.
-        base_hashes = base_meta.get("file_hashes")
-        if base_hashes is None:
-            sys.exit("base artifact predates per-file hashes — run the "
-                     "full sweep once to establish the splice baseline")
-        cur_hashes = source_file_hashes()
-        changed = {p for p in set(base_hashes) | set(cur_hashes)
-                   if base_hashes.get(p) != cur_hashes.get(p)}
-        affected = affected_queries(changed)
-        if affected is None:
-            sys.exit(f"splice refused: harness/unmapped files changed "
-                     f"({sorted(changed)}) — run the full sweep")
-        not_covered = sorted(affected - set(only))
-        if not_covered:
-            sys.exit(
-                "splice refused: the diff since the base artifact touches "
-                f"files {sorted(changed)} whose import closure reaches "
-                f"queries not in --only: {not_covered} — widen --only or "
-                "run the full sweep")
-        results.update(base)
-
-    sweep = list(qs) if only is None else only
+    n_fail = 0
     t0 = time.time()
-    for i, name in enumerate(sweep, 1):
+    for i, (name, fn) in enumerate(qs.items(), 1):
         rec = {
             "rows_match": False, "schema_match": False, "hash_match": False,
             "spark_rows": None, "oracle_rows": None, "err": None,
         }
         try:
-            actual = qs[name](spark, sf_dir).toPandas()
+            actual = fn(spark, sf_dir).toPandas()
             rec["spark_rows"] = len(actual)
             if name not in oracles:
                 rec["err"] = "rows-only (no oracle)"
@@ -312,56 +76,19 @@ def main() -> None:
                     expected = conn.sql(oracles[name]).df()
                 finally:
                     conn.close()
-                # the SAME comparison core the differential test asserts
-                # (tests/oracle.compare) — keep the two in lockstep
                 rec.update(compare_result(actual, expected))
         except Exception as exc:  # record, keep sweeping
             rec["err"] = f"{type(exc).__name__}: {exc}"[:300]
-        results[name] = rec
         if failed(rec):
-            status = "FAIL"
+            n_fail += 1
+            status = f"FAIL {rec}"
         elif rec["hash_match"] is None:
             status = "SKIP"
         else:
             status = "MATCH"
-        print(f"[{i}/{len(sweep)}] {name}: {status}", flush=True)
+        print(f"[{i}/{len(qs)}] {name}: {status}", flush=True)
 
-    if source_fingerprint() != fp_start:
-        sys.exit("source changed while the sweep ran — results and "
-                 "fingerprint would disagree; re-run on settled code")
-    # re-emit in current registry order so full and spliced artifacts
-    # diff cleanly against each other
-    results = {name: results[name] for name in qs}
-    n_fail = sum(1 for r in results.values() if failed(r))
-    results["__meta__"] = {
-        "fingerprint": fp_start,
-        "sf_dir": sf_dir,
-        "n_queries": len(qs),
-        "n_fail": n_fail,
-        # per-file hashes: the splice-admissibility baseline for the
-        # NEXT --only run (ADVICE r8)
-        "file_hashes": source_file_hashes(),
-    }
-    if only is not None:
-        # splice provenance, CUMULATIVE since the last full sweep: the
-        # union of every name re-verified since that sweep, plus the full
-        # sweep's fingerprint. The admissibility check above has already
-        # PROVEN each link of the chain (changed files → affected
-        # queries ⊆ the link's --only set); ``changed_files`` records
-        # this splice's link for the audit trail.
-        prior = base_meta.get("incremental")
-        names = set(only) | set(prior["reverified"] if prior else ())
-        results["__meta__"]["incremental"] = {
-            "reverified": sorted(names),
-            "base_fingerprint": prior["base_fingerprint"]
-            if prior else base_meta["fingerprint"],
-            "changed_files": sorted(changed),
-        }
-    with open(out, "w") as fh:
-        json.dump(results, fh, indent=1)
-    mode = f"spliced {len(sweep)}/{len(qs)}" if only is not None else \
-        f"{len(qs)} queries"
-    print(f"wrote {out}: {mode}, {n_fail} failures, {time.time() - t0:.0f}s")
+    print(f"{len(qs)} queries, {n_fail} failures, {time.time() - t0:.0f}s")
     if n_fail:
         sys.exit(1)
 
