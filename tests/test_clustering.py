@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import pytest
+
+from tfm_taxitrips_spark.operators import clustering
 from tfm_taxitrips_spark.operators.clustering import connected_components
 
 
@@ -119,3 +122,10 @@ def test_centroid_shift_matches_float_reference(spark, sf_smoke):
         assert (r.n_a, r.n_b) == (n_a, n_b)
         expect = sum((sa * n_b - sb * n_a) ** 2 for sa, sb in zip(s_a, s_b))
         assert r.shift_num == expect
+
+
+def test_round_cap_raises(spark, monkeypatch):
+    # a chain longer than the cap must fail loudly, not return partial labels
+    monkeypatch.setattr(clustering, "MAX_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match="did not converge within 2 rounds"):
+        _cc(spark, [(i, i + 1) for i in range(20, 30)])

@@ -90,20 +90,26 @@ def test_max_split_unit_parse(raw, expect):
     assert _parse_bytes_conf(raw) == expect
 
 
-def test_ephemeral_checkpoint_dir_env_override_and_fallback(monkeypatch, tmp_path):
-    """The drain-checkpoint scratch helper honors $SPARK_GRAFT_CHK_SCRATCH,
-    prefers /dev/shm when present, and always creates a fresh dir."""
+def test_ephemeral_scratch_dir_env_override_and_fallback(monkeypatch, tmp_path):
+    """The scratch helper honors $SPARK_GRAFT_CHK_SCRATCH, prefers /dev/shm
+    when present, always creates a fresh dir, and falls back to the
+    system tempdir when the override lacks the free space asked for."""
     import os
+    import tempfile
 
-    from tfm_taxitrips_spark.streaming.pipeline import _ephemeral_checkpoint_dir
+    from tfm_taxitrips_spark.session import ephemeral_scratch_dir
 
     monkeypatch.setenv("SPARK_GRAFT_CHK_SCRATCH", str(tmp_path))
-    d = _ephemeral_checkpoint_dir()
+    d = ephemeral_scratch_dir("tfm_chk_")
     assert os.path.isdir(d) and d.startswith(str(tmp_path))
     os.rmdir(d)
 
+    big = ephemeral_scratch_dir("tfm_chk_", expect_bytes=1 << 60)
+    assert os.path.dirname(big) == tempfile.gettempdir()
+    os.rmdir(big)
+
     monkeypatch.delenv("SPARK_GRAFT_CHK_SCRATCH")
-    d2 = _ephemeral_checkpoint_dir()
+    d2 = ephemeral_scratch_dir("tfm_chk_")
     assert os.path.isdir(d2)
     if os.path.isdir("/dev/shm"):
         assert d2.startswith("/dev/shm/")

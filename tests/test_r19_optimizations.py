@@ -250,19 +250,20 @@ def test_survivorship_runs_on_fixture(spark, sf_smoke, n):
 
 
 def test_complete_drain_restores_no_data_batch_conf(spark, sf_smoke):
-    """The complete-mode drain's scoped no-data-micro-batch skip must
-    restore the session conf (the _scoped_shuffle_partitions hygiene),
-    and the drained complete-mode result must match the batch answer —
-    the no-data batch cannot change a complete-mode sink."""
+    """The complete-mode drain's scoped no-data-micro-batch skip and its
+    state-partition count must both restore the session conf, and the
+    drained complete-mode result must match the batch answer — the
+    no-data batch cannot change a complete-mode sink."""
     from pyspark.sql import functions as F
 
     from tfm_taxitrips_spark.queries.streamq import q_stream_window_rollup
     from tfm_taxitrips_spark.sources.readers import table
 
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get(key)
+    keys = ("spark.sql.streaming.noDataMicroBatches.enabled",
+            "spark.sql.shuffle.partitions")
+    prev = {k: spark.conf.get(k) for k in keys}
     out = q_stream_window_rollup(spark, sf_smoke)
-    assert spark.conf.get(key) == prev
+    assert {k: spark.conf.get(k) for k in keys} == prev
     n_stream = out.agg(F.sum("n_events")).collect()[0][0]
     n_batch = table(spark, sf_smoke, "events").where(
         F.col("ts").isNotNull()).count()

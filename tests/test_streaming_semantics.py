@@ -744,3 +744,65 @@ def test_stream_table_reads_both_table_layouts(spark, sf_smoke, tmp_path):
         f"{dir_form}/events.parquet"
     )
     assert drained_count(dir_form) == expected
+
+
+def test_drains_leave_no_memory_sink_views(spark, sf_smoke):
+    """run_to_memory drops its ``mem_*`` view after the drain; the frames
+    it returned still collect their rows."""
+    from tfm_taxitrips_spark.queries.streamq import (
+        q_stream_dedup,
+        q_stream_window_rollup,
+    )
+
+    rolled = q_stream_window_rollup(spark, sf_smoke)
+    deduped = q_stream_dedup(spark, sf_smoke)
+    leaked = [t.name for t in spark.catalog.listTables()
+              if t.name.startswith("mem_")]
+    assert leaked == []
+    assert rolled.collect()
+    assert deduped.collect()
+
+
+def test_every_drain_uses_the_state_partition_rule(spark, sf_smoke):
+    """Complete, append and update (foreachBatch serving) drains all run
+    every state operator on min(defaultParallelism, 8) partitions."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from tfm_taxitrips_spark.queries.streamq import (
+        q_stream_dedup_ttl,
+        q_stream_topk,
+        q_stream_window_rollup,
+    )
+
+    seen: dict[str, set] = {}  # query id -> reported partition counts
+
+    class _Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            ops = event.progress.stateOperators
+            if ops:
+                seen.setdefault(str(event.progress.id), set()).update(
+                    op.numShufflePartitions for op in ops)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = _Listener()
+    spark.streams.addListener(listener)
+    try:
+        for q in (q_stream_window_rollup, q_stream_dedup_ttl, q_stream_topk):
+            q(spark, sf_smoke).collect()
+        # the listener bus delivers progress asynchronously
+        deadline = time.monotonic() + 30
+        while len(seen) < 3 and time.monotonic() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    expect = min(spark.sparkContext.defaultParallelism, 8)
+    assert len(seen) == 3, seen
+    assert all(parts == {expect} for parts in seen.values()), (expect, seen)

@@ -28,25 +28,22 @@ Scale properties (100 TB corpus):
   keyed the same way, and AQE coalesces the tiny post-filter volumes.
 - Rounds are bounded by the cluster *diameter*, not cluster size; dup
   clusters are shallow (most are pairs/triangles), so convergence is
-  typically 2-4 rounds. ``max_iter`` caps pathological chains.
+  typically 2-4 rounds. ``MAX_ROUNDS`` caps pathological chains.
 - ``localCheckpoint`` truncates the lineage each round — without it the
   plan doubles per iteration and the job graph explodes by round ~15.
 """
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: propagation rounds before :func:`connected_components` gives up
+MAX_ROUNDS = 50
+
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-    strict: bool = True,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Label every node of the undirected graph ``edges`` with the minimum
     node id reachable from it (= a canonical cluster id).
@@ -55,10 +52,9 @@ def connected_components(
     distinct node appearing in ``edges``. Nodes in no edge are absent (a
     doc with no dup candidate is trivially its own cluster).
 
-    If the fixpoint is not reached within ``max_iter`` rounds (component
-    diameter > max_iter), partially-propagated labels are WRONG — raise by
-    default rather than return them; ``strict=False`` downgrades to a
-    warning for exploratory use.
+    If the fixpoint is not reached within ``MAX_ROUNDS`` rounds (component
+    diameter > MAX_ROUNDS), partially-propagated labels are WRONG, so it
+    raises rather than return them.
     """
     e = edges.select(
         F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
@@ -76,8 +72,7 @@ def connected_components(
     _label_sum = F.sum(F.col("comp").cast("decimal(38,0)"))
     prev = labels.agg(_label_sum).first()[0]
 
-    converged = False
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         # propagate: each node offers its label to every neighbor
         offers = sym.join(labels, sym.u == labels.node).select(
             F.col("v").alias("node"), F.col("comp")
@@ -90,16 +85,10 @@ def connected_components(
         )
         cur = labels.agg(_label_sum).first()[0]
         if cur == prev:  # labels only decrease; equal sum ⟺ fixpoint
-            converged = True
-            break
+            return labels
         prev = cur
-    if not converged:
-        msg = (
-            f"connected_components did not converge within max_iter={max_iter}"
-            " rounds; labels are partially propagated (component diameter"
-            " exceeds max_iter)"
-        )
-        if strict:
-            raise RuntimeError(msg)
-        warnings.warn(msg, stacklevel=2)
-    return labels
+    raise RuntimeError(
+        f"connected_components did not converge within {MAX_ROUNDS} rounds;"
+        " labels are partially propagated (component diameter exceeds the"
+        " round cap)"
+    )

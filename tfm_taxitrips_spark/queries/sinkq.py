@@ -134,12 +134,9 @@ def q_sink_stream_parquet_roundtrip(
     in state past an availableNow drain, so the durable-sink contract is
     raw-with-derived-partitions, and rollups happen on read (or in the
     update-mode serving path, stream_topk)."""
-    from tfm_taxitrips_spark.streaming.pipeline import (
-        _ephemeral_checkpoint_dir,
-        read_events_stream,
-    )
-
     import tempfile
+
+    from tfm_taxitrips_spark.streaming.pipeline import read_events_stream
 
     # r19 (ADVICE r18): the parquet SINK itself goes back to the REAL
     # filesystem — the durable write + read-back is what this query
@@ -147,7 +144,7 @@ def q_sink_stream_parquet_roundtrip(
     # contract to a tmpfs round-trip. Only the one-shot drain CHECKPOINT
     # (written, never re-read, deleted in-call) stays on RAM scratch.
     base = tempfile.mkdtemp(prefix="tfm_sink_k2_")
-    chk = _ephemeral_checkpoint_dir()
+    chk = ephemeral_scratch_dir("tfm_chk_")
     try:
         stream = read_events_stream(spark, sf_dir)
         enriched = stream.withColumn("year", F.year("ts")).withColumn(

@@ -30,68 +30,12 @@ from tfm_taxitrips_spark.streaming.pipeline import (
 )
 
 
-# State-partition count for the A5 rollup drain: its state cardinality
-# is windows × event_types — TIME-linear (≈35k window slots/year × a
-# handful of types), never row-linear — so a small fixed count bounds
-# the per-partition state-store commit overhead while the heavy path
-# (scan + map-side partial agg) keeps source parallelism. Measured at
-# sf0.1: 8 drains ~2× faster than 32 (see run_to_memory's docstring).
-# On a long-horizon cluster deployment this scales with the retained
-# window span, not with events/sec — revisit only if dims grow.
-ROLLUP_STATE_PARTITIONS = 8
-
-
-def drain_state_partitions() -> int:
-    """State-partition count for the KEY-scaled one-shot drains (dedup,
-    sessionization, stream-stream join, per-user totals) — r18, guide
-    §2.2/§3 applied to the state store: every micro-batch commits one
-    delta file (create + CRC + rename, all fsynced) PER PARTITION PER
-    state store, and a stream-stream join keeps FOUR stores per side-pair
-    — so partition count, not data volume, dominates a drain over a
-    bounded fixture (measured on stream_stream_join at sf0.1, 200k
-    events: 32 partitions 15.3 s → 8 partitions 3.2 s, with addBatch
-    ~5× faster and identical results; state content is partition-count
-    invariant and the driver compare is order-insensitive).
-
-    Scale story: these memory-sink drains are the graded HARNESS path
-    over fixture-sized replays; their state is bounded by the fixture's
-    key cardinality, so ``min(cores, 8)`` keeps the driver's low-core
-    bench legs proportionate instead of hard-coding the 32-core host.
-    A production deployment sizes state partitions to STATE VOLUME
-    (keys × row width / target partition size) through the durable-sink
-    entry points, which take caller-provided partitioning; override here
-    with ``$SPARK_GRAFT_STREAM_STATE_PARTITIONS`` when replaying a
-    corpus whose key space outgrows the fixture assumption."""
-    import os
-
-    from tfm_taxitrips_spark.session import default_parallelism
-
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env is not None:
-        # validate here (r19, ADVICE r18): a 0/negative/non-numeric
-        # override would otherwise surface as a baffling planner error
-        # deep inside run_to_memory's shuffle-partition scope
-        try:
-            n = int(env)
-        except ValueError:
-            raise ValueError(
-                "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be an integer "
-                f"(got {env!r})") from None
-        if n < 1:
-            raise ValueError(
-                "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be >= 1 "
-                f"(got {n})")
-        return n
-    return max(1, min(default_parallelism(), 8))
-
-
 def q_stream_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 — the Druid 15-minute rollup, owned natively as a watermarked
     windowed streaming aggregation."""
     stream = read_events_stream(spark, sf_dir)
     rolled = windowed_rollup(stream)
-    return run_to_memory(rolled, spark,
-                         state_partitions=ROLLUP_STATE_PARTITIONS)
+    return run_to_memory(rolled, spark)
 
 
 _STREAM_ROLLUP_SQL = f"""
@@ -110,8 +54,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = deduped.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"), dsum("value").alias("total_value")
     )
-    return run_to_memory(counts, spark,
-                         state_partitions=drain_state_partitions())
+    return run_to_memory(counts, spark)
 
 
 _STREAM_DEDUP_SQL = f"""
@@ -146,8 +89,7 @@ def q_stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = read_events_stream(spark, sf_dir)
     increments = streaming_ttl_dedup(stream, ttl=STREAM_DEDUP_TTL)
-    drained = run_to_memory(increments, spark, output_mode="append",
-                            state_partitions=drain_state_partitions())
+    drained = run_to_memory(increments, spark, output_mode="append")
     return (
         drained.groupBy("user_id")
         .agg(F.sum("n_events").cast("bigint").alias("n_events"),
@@ -219,8 +161,7 @@ def q_stream_dedup_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = read_events_stream(spark, sf_dir)
     increments = streaming_debounce_dedup(stream, ttl=STREAM_DEBOUNCE_TTL)
-    drained = run_to_memory(increments, spark, output_mode="append",
-                            state_partitions=drain_state_partitions())
+    drained = run_to_memory(increments, spark, output_mode="append")
     return (
         drained.groupBy("user_id")
         .agg(F.sum("n_events").cast("bigint").alias("n_events"),
@@ -392,10 +333,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = joined.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_events"), dsum("value").alias("total_value")
     )
-    # per-segment state (a handful of rows) — size the state store to the
-    # STATE, not the session shuffle default (ROLLUP_STATE_PARTITIONS note)
-    return run_to_memory(agg, spark,
-                         state_partitions=ROLLUP_STATE_PARTITIONS)
+    return run_to_memory(agg, spark)
 
 
 _STREAM_JOIN_SQL = f"""
@@ -414,8 +352,7 @@ def q_stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = read_events_stream(spark, sf_dir)
     sess = streaming_sessionize(stream, gap="30 minutes")
-    return run_to_memory(sess, spark, output_mode="append",
-                         state_partitions=drain_state_partitions())
+    return run_to_memory(sess, spark, output_mode="append")
 
 
 def _stream_session_sql() -> str:
@@ -481,8 +418,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("click_ts").alias("click_us"),
         F.unix_micros("purchase_ts").alias("purchase_us"),
     )
-    return run_to_memory(out, spark, output_mode="append",
-                         state_partitions=drain_state_partitions())
+    return run_to_memory(out, spark, output_mode="append")
 
 
 _STREAM_STREAM_SQL = """
@@ -508,17 +444,13 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated runs (bench / differential / driver) don't accumulate in
     /tmp."""
     import shutil
+    import tempfile
 
+    from tfm_taxitrips_spark.session import ephemeral_scratch_dir
     from tfm_taxitrips_spark.streaming.serving import (
         run_topk_serving,
         topk_view,
     )
-
-    from tfm_taxitrips_spark.streaming.pipeline import (
-        _ephemeral_checkpoint_dir,
-    )
-
-    import tempfile
 
     stream = read_events_stream(spark, sf_dir)
     rolled = windowed_rollup(stream)
@@ -529,11 +461,9 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # streaming.serving). Only the drain checkpoint (written, never
     # re-read, deleted in-call) stays on RAM scratch.
     base = tempfile.mkdtemp(prefix="tfm_serving_")
-    chk = _ephemeral_checkpoint_dir()
+    chk = ephemeral_scratch_dir("tfm_chk_")
     try:
-        # same aggregate-sized rollup state as the A5 drain
-        run_topk_serving(rolled, f"{base}/table", chk,
-                         state_partitions=ROLLUP_STATE_PARTITIONS)
+        run_topk_serving(rolled, f"{base}/table", chk)
         view = topk_view(spark, f"{base}/table", STREAM_TOPK_K)
         # materialize the k rows BEFORE removing the serving dir (the view
         # is lazy over its parquet files); k is small by construction, so
@@ -581,11 +511,7 @@ def q_stream_window_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").alias("window_start"), "event_type", "_hll"
         )
     )
-    # windows x event_types of fixed-size HLL registers — aggregate-sized
-    # state; on a default-200-partition session the per-partition state
-    # commits dominated the drain ~20x (measured r8)
-    streamed = run_to_memory(agg, spark,
-                             state_partitions=ROLLUP_STATE_PARTITIONS)
+    streamed = run_to_memory(agg, spark)
     ev = table(spark, sf_dir, "events")
     exact = ev.groupBy(
         F.window("ts", "15 minutes").alias("w"), "event_type"
@@ -632,8 +558,7 @@ def q_stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = read_events_stream(spark, sf_dir)
     totals = streaming_running_totals(stream)
-    return run_to_memory(totals, spark, output_mode="append",
-                         state_partitions=drain_state_partitions())
+    return run_to_memory(totals, spark, output_mode="append")
 
 
 _STREAM_RUNNING_SQL = """
@@ -669,8 +594,7 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.when(F.col("event_type") == "click", us)).alias("c_us"),
         F.min(F.when(F.col("event_type") == "purchase", us)).alias("p_us"),
     )
-    drained = run_to_memory(per_user, spark,
-                            state_partitions=drain_state_partitions())
+    drained = run_to_memory(per_user, spark)
     s2 = F.col("v_us").isNotNull() & (F.col("c_us") > F.col("v_us"))
     s3 = s2 & (F.col("p_us") > F.col("c_us"))
     counts = drained.agg(
@@ -706,9 +630,7 @@ def q_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = flagged.groupBy(
         "words_ok", "word_len_ok", "stop_ok", "keep"
     ).agg(F.count(F.lit(1)).alias("n_docs"))
-    # the state is the rule-outcome grid (<= 2^4 rows): aggregate-sized
-    return run_to_memory(grid, spark,
-                         state_partitions=ROLLUP_STATE_PARTITIONS)
+    return run_to_memory(grid, spark)
 
 
 def _stream_gate_sql() -> str:
@@ -751,9 +673,7 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    # hourly windows x event_types — time-linear, aggregate-sized state
-    return run_to_memory(bars, spark,
-                         state_partitions=ROLLUP_STATE_PARTITIONS)
+    return run_to_memory(bars, spark)
 
 
 _STREAM_OHLC_SQL = """
@@ -790,8 +710,7 @@ def q_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = read_events_stream(spark, sf_dir)
     trans = streaming_transitions(stream)
-    return run_to_memory(trans, spark, output_mode="append",
-                         state_partitions=drain_state_partitions())
+    return run_to_memory(trans, spark, output_mode="append")
 
 
 _STREAM_TRANS_SQL = """
@@ -831,8 +750,7 @@ def q_stream_orphan_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("dim_key").isNull())
         .select("event_id", "user_id", "event_type")
     )
-    return run_to_memory(gated, spark, output_mode="append",
-                         state_partitions=drain_state_partitions())
+    return run_to_memory(gated, spark, output_mode="append")
 
 
 _STREAM_ORPHAN_SQL = """

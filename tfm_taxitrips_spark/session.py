@@ -39,28 +39,26 @@ def ephemeral_scratch_dir(prefix: str, expect_bytes: int | None = None) -> str:
     page-cache-writeback cost from the timed path. Callers MUST delete
     the directory themselves (they already do — it is call-scoped).
 
-    r19 (ADVICE r18): the tmpfs preference is GATED on free space —
-    Docker's default /dev/shm is 64 MB, and an ungated dataset-sized
-    write there would ENOSPC a query that succeeds on disk. Callers
-    writing dataset-sized scratch pass ``expect_bytes`` (typically the
-    optimizer's ``sizeInBytes`` of the frame being written — an
-    uncompressed over-estimate, the safe direction); tmpfs is used only
-    when its free space covers 2× that hint. Without a hint the floor
-    is 256 MiB — plenty for the checkpoint/WAL dirs that are the
-    default use. Override with ``$SPARK_GRAFT_CHK_SCRATCH`` (e.g. a
-    fast local disk when /dev/shm is small); falls back to the system
-    tempdir when no (or a too-small) tmpfs exists. Durable outputs
-    (``sinks.writers``) never come here — they take caller-provided
-    locations."""
-    base = os.environ.get("SPARK_GRAFT_CHK_SCRATCH")
-    if base is None and os.path.isdir("/dev/shm"):
-        need = 2 * expect_bytes if expect_bytes else 256 << 20
-        try:
-            st = os.statvfs("/dev/shm")
-            if st.f_bavail * st.f_frsize >= need:
-                base = "/dev/shm"
-        except OSError:
-            pass
+    The candidate directory is ``$SPARK_GRAFT_CHK_SCRATCH`` (e.g. a fast
+    local disk when /dev/shm is small) or else ``/dev/shm``, and it is
+    GATED on free space: Docker's default /dev/shm is 64 MB, and an
+    ungated dataset-sized write there would ENOSPC a query that succeeds
+    on disk. Callers writing dataset-sized scratch pass ``expect_bytes``
+    (typically the optimizer's ``sizeInBytes`` of the frame being
+    written — an uncompressed over-estimate, the safe direction); the
+    candidate is used only when its free space covers 2× that hint.
+    Without a hint the floor is 256 MiB — plenty for the checkpoint/WAL
+    dirs that are the default use. A missing or too-small candidate
+    falls back to the system tempdir. Durable outputs (``sinks.writers``)
+    never come here — they take caller-provided locations."""
+    base = os.environ.get("SPARK_GRAFT_CHK_SCRATCH", "/dev/shm")
+    need = 2 * expect_bytes if expect_bytes else 256 << 20
+    try:
+        st = os.statvfs(base)
+        if st.f_bavail * st.f_frsize < need:
+            base = None
+    except OSError:
+        base = None
     return tempfile.mkdtemp(prefix=prefix, dir=base)
 
 

@@ -44,7 +44,7 @@ def overwrite_partitions(
     this one write, so a concurrent partitioned overwrite on the same
     session that expects STATIC semantics (replace the whole table) can
     never be silently flipped to dynamic mid-plan — the same
-    session-global-mutation race class ``_scoped_shuffle_partitions``
+    session-global-mutation race class ``pipeline._drain_settings``
     guards against, here eliminated instead of guarded.
     """
     (

@@ -412,10 +412,10 @@ def table(
         import weakref
 
         _TABLE_MEMO = weakref.WeakKeyDictionary()
-    # pin the session to UTC on every call (not only at build): the
-    # driver's vanilla session inherits the HOST timezone, and a non-UTC
-    # session would shift Spark's year()/date_trunc() against DuckDB's
-    # naive timestamps.
+    # pin the session to UTC on every call, memo hits included (the one
+    # pin for every table build): the driver's vanilla session inherits
+    # the HOST timezone, and a non-UTC session would shift Spark's
+    # year()/date_trunc() against DuckDB's naive timestamps.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     memo = _TABLE_MEMO.setdefault(spark, {})
     key = (sf_dir, name, raw)
@@ -462,12 +462,6 @@ def _table_build(
       MEASURE-column predicates stop reaching the parquet reader (they
       now filter a CASE expression), and only on these five tables.
     """
-    # pin the session to UTC: the driver's vanilla session inherits the
-    # HOST timezone, and a non-UTC session would shift Spark's
-    # year()/date_trunc() against DuckDB's naive timestamps. Set here (not
-    # only in the session factory) because the grading driver builds its
-    # own session.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         df = read_events(spark, f"{sf_dir}/{name}.parquet")
     else:

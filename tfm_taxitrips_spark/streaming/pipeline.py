@@ -11,7 +11,6 @@ path (production uses the kafka/parquet sinks in ``sinks.writers``).
 
 from __future__ import annotations
 
-import os
 import shutil
 import threading
 import uuid
@@ -21,47 +20,57 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tfm_taxitrips_spark.functions.aggregates import dsum
+from tfm_taxitrips_spark.session import ephemeral_scratch_dir
 
-#: serializes the scoped shuffle-partition override below: the override
-#: mutates a SESSION-global conf, so two concurrent drains (a threaded
-#: bench, a parallel test plugin) would otherwise race it and silently
-#: plan each other's queries with the wrong partition count
-_SHUFFLE_SCOPE_LOCK = threading.Lock()
+#: serializes :func:`_drain_settings`: the settings it scopes are
+#: SESSION-global, so two concurrent drains (a threaded bench, a parallel
+#: test plugin) would otherwise race them and silently plan each other's
+#: queries with the wrong values
+_DRAIN_SCOPE_LOCK = threading.Lock()
 
 
 @contextmanager
-def _scoped_shuffle_partitions(spark: SparkSession, n: int | None):
-    """Temporarily set ``spark.sql.shuffle.partitions`` for one streaming
-    drain (r8 verdict advisory #1 / ADVICE r8). ``None`` = no override.
+def _drain_settings(spark: SparkSession, output_mode: str):
+    """The one place a drain changes session settings, restored on exit.
 
-    What the guard does and does not close: the non-blocking lock turns
-    the silent-plan-degradation race between two concurrent DRAINS in
-    this process into a loud error. A concurrent BATCH plan built on the
-    same session from another thread while a drain holds the override is
-    still exposed — the conf is session-global by Spark's design — which
-    is why the invariant stays documented at every call seam: one
-    planning query at a time per session; full isolation requires
-    ``SparkSession.newSession()`` per drain (not the default because the
-    memory-sink result table registers in the session that reads it).
+    - ``spark.sql.shuffle.partitions`` = ``min(defaultParallelism, 8)``:
+      every state partition commits one state-store delta per batch
+      whatever its size, and on 4 cores at sf0.1 the rule's 4 partitions
+      drained the rollup, dedup and stream-stream join 14-30% faster than
+      8. The count freezes into the drain's fresh checkpoint at
+      ``start()``; state content does not depend on it.
+    - complete mode only: ``noDataMicroBatches.enabled=false``. Complete
+      mode re-emits the whole state every batch, so the trailing no-data
+      batch cannot change the sink (−13% per drain at sf0.1). Append mode
+      keeps it: that batch advances the watermark and flushes final rows.
+
+    The non-blocking lock turns two concurrent drains in this process into
+    a loud error. A concurrent BATCH plan built on the same session from
+    another thread is still exposed (the conf is session-global by Spark's
+    design): one planning query at a time per session, or isolate with
+    ``SparkSession.newSession()`` per drain.
     """
-    if n is None:
-        yield
-        return
-    if not _SHUFFLE_SCOPE_LOCK.acquire(blocking=False):
+    if not _DRAIN_SCOPE_LOCK.acquire(blocking=False):
         raise RuntimeError(
-            "concurrent scoped shuffle-partition overrides on one session: "
-            "a drain holding the override is already in flight — serialize "
-            "drains, or isolate with SparkSession.newSession() per drain"
+            "concurrent drains on one session: a drain holding the session "
+            "settings is already in flight — serialize drains, or isolate "
+            "with SparkSession.newSession() per drain"
         )
     try:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        n = min(spark.sparkContext.defaultParallelism, 8)
+        settings = {"spark.sql.shuffle.partitions": str(n)}
+        if output_mode == "complete":
+            settings["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+        prev = {k: spark.conf.get(k) for k in settings}
+        for k, v in settings.items():
+            spark.conf.set(k, v)
         try:
             yield
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+            for k, v in prev.items():
+                spark.conf.set(k, v)
     finally:
-        _SHUFFLE_SCOPE_LOCK.release()
+        _DRAIN_SCOPE_LOCK.release()
 
 
 def _path_is_directory(spark: SparkSession, path: str) -> bool:
@@ -171,93 +180,34 @@ def windowed_rollup(
     )
 
 
-def _ephemeral_checkpoint_dir() -> str:
-    """Scratch checkpoint dir for a ONE-SHOT drain, preferring RAM-backed
-    storage (r18, guide §1.2 'per-task work' applied to the driver/IO
-    path): an ``availableNow`` drain into a memory sink writes its
-    offsets/commit WAL and one state-store delta+snapshot per partition
-    per batch, all fsynced — and then :func:`run_to_memory` deletes the
-    whole directory before returning. Durability of that checkpoint
-    buys nothing (the result table lives in memory; the checkpoint has
-    no reader after the drain), so pointing it at tmpfs removes pure
-    fsync/IO latency from every streaming drain. Production streams
-    (``sinks.writers``) take caller-provided durable checkpoint
-    locations and are unaffected. Override with
-    ``$SPARK_GRAFT_CHK_SCRATCH`` (e.g. a fast local disk when /dev/shm
-    is small); falls back to the system tempdir when no tmpfs exists.
-    (Shared policy lives in :func:`session.ephemeral_scratch_dir` — the
-    eager-contract audit queries use the same scratch for their
-    throwaway datasets.)"""
-    from tfm_taxitrips_spark.session import ephemeral_scratch_dir
-
-    return ephemeral_scratch_dir("tfm_chk_")
-
-
 def run_to_memory(
     df: DataFrame,
     spark: SparkSession,
     output_mode: str = "complete",
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Drain a streaming DataFrame (availableNow) into a memory sink; return
     the materialized result as a batch DataFrame.
 
-    ``state_partitions`` overrides ``spark.sql.shuffle.partitions`` for
-    THIS drain only (set before ``start()`` — the moment the state-store
-    partition count freezes into the new checkpoint — and restored after
-    the drain; each call uses a fresh checkpoint, so no stored state ever
-    sees a mismatched count).  Use it for stateful queries whose state
-    cardinality is AGGREGATE-sized (windows × dims, time-linear): the
-    per-partition HDFS state-store commit (one delta file create+rename
-    per partition per batch) is pure overhead past the handful of
-    partitions the state needs, and the heavy pre-exchange work (scan +
-    map-side partial aggregation) runs at source parallelism regardless.
-    Measured on the A5 rollup at sf0.1 (14k state rows): 8 partitions
-    drain ~2× faster than 32 (median 1.09 s vs 1.57 s, 4-rep
-    round-robin).  Key-scaled streams (dedup, sessionization, the
-    stream-stream join) pass ``queries.streamq.drain_state_partitions()``
-    — the r18 policy: over a bounded replay the per-partition commit
-    overhead dominates long before state volume does, and the env
-    override (``$SPARK_GRAFT_STREAM_STATE_PARTITIONS``) re-sizes a
-    replay whose key space outgrows that assumption.  Leave ``None``
-    only when the inherited session count is genuinely the right order
-    for the state.  The override rides
-    :func:`_scoped_shuffle_partitions` — the conf is session-visible, the
-    entry points here run queries sequentially, and the scope's
-    non-blocking lock turns any future concurrent drain into a loud
-    error instead of a silently mis-planned query (r8 advisory #1)."""
+    The drain runs under :func:`_drain_settings` on
+    ``min(defaultParallelism, 8)`` state partitions, because per-partition
+    state commits dominate a drain (on 4 cores, 4 drained 14-30% faster
+    than 8). The memory-sink view is dropped before returning; the
+    returned frame keeps the sink's rows."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    chk = _ephemeral_checkpoint_dir()
-    # r19 (guide §1.2 applied to the micro-batch machinery): COMPLETE-mode
-    # drains skip the trailing no-data micro-batch — complete mode
-    # re-emits the full state table every batch, so a zero-row batch
-    # cannot change the sink (measured identical 14,385-row result,
-    # −13% per drain at sf0.1: one fewer round of offsets WAL + per-
-    # partition state commits). APPEND-mode drains keep it: that batch
-    # advances the watermark and FLUSHES final rows — skipping it loses
-    # results. Conf is scoped+restored like the partition override; the
-    # drain entry points run one query at a time per session (the
-    # _scoped_shuffle_partitions invariant).
-    _ND_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
-    skip_no_data = output_mode == "complete"
-    with _scoped_shuffle_partitions(spark, state_partitions):
-        prev_nd = spark.conf.get(_ND_KEY)
-        if skip_no_data:
-            spark.conf.set(_ND_KEY, "false")
-        try:
-            query = (
-                df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", chk)
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-        finally:
-            if skip_no_data:
-                spark.conf.set(_ND_KEY, prev_nd)
+    chk = ephemeral_scratch_dir("tfm_chk_")
+    with _drain_settings(spark, output_mode):
+        query = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", chk)
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
     # the drain is complete: the checkpoint (offsets/state WAL) has no
     # further reader — remove it rather than leaking one dir per call
     shutil.rmtree(chk, ignore_errors=True)
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out

@@ -10,7 +10,8 @@ scale.
 
 Run: ``python tools/selfcheck.py [sf_dir]`` (default: the sf0.01 fixture,
 ``tests/conftest.SF_CORRECT``). Prints one status line per query and
-exits 1 if any query failed. Writes nothing.
+exits 1 if any query failed or a ``mem_*`` memory-sink view is left in
+the session after the sweep. Writes nothing.
 """
 
 from __future__ import annotations
@@ -89,7 +90,12 @@ def main() -> None:
         print(f"[{i}/{len(qs)}] {name}: {status}", flush=True)
 
     print(f"{len(qs)} queries, {n_fail} failures, {time.time() - t0:.0f}s")
-    if n_fail:
+    # every drain drops its memory-sink view; one left behind is a leak
+    leaked = [t.name for t in spark.catalog.listTables()
+              if t.name.startswith("mem_")]
+    if leaked:
+        print(f"{len(leaked)} memory-sink views left in the session: {leaked}")
+    if n_fail or leaked:
         sys.exit(1)
 
 
