@@ -21,6 +21,7 @@ from tfm_taxitrips_spark.operators.cleaning import clean_trips
 from tfm_taxitrips_spark.operators.enrich import enrich_trips_with_areas
 from tfm_taxitrips_spark.pipelines import build_areas, ingest_historic, streaming_job
 from tfm_taxitrips_spark.sources.readers import read_trips_csv, read_trips_parquet
+from tfm_taxitrips_spark.sources import simulator
 from tfm_taxitrips_spark.sources.simulator import replay_rows_as_json
 
 
@@ -111,6 +112,28 @@ def test_streaming_job_parity(spark, trips, tmp_path_factory):
     b = batch.agg(F.sum("fare"), F.sum("trip_seconds")).first()
     assert g[0] == pytest.approx(b[0], abs=1e-6)
     assert g[1] == b[1]
+
+
+def test_replay_publishes_each_batch_whole(tmp_path, monkeypatch):
+    """A polling file source lists the drop directory at any moment: every
+    batch is written under a hidden name (which the file source skips) and
+    renamed into place, so a listed file is always complete."""
+    written = []
+
+    def spy(path, mode="r", *args, **kwargs):
+        if "w" in mode:
+            written.append(os.path.basename(path))
+        return open(path, mode, *args, **kwargs)
+
+    monkeypatch.setattr(simulator, "open", spy, raising=False)
+    rows = [{"trip_id": str(i), "fare": i * 1.5} for i in range(5)]
+    paths = replay_rows_as_json(rows, str(tmp_path), batch_size=2)
+    assert [os.path.basename(p) for p in paths] == [
+        "batch-00000.json", "batch-00001.json", "batch-00002.json"]
+    assert written == ["." + os.path.basename(p) for p in paths]
+    assert sorted(os.listdir(tmp_path)) == [os.path.basename(p) for p in paths]
+    with open(paths[-1]) as f:
+        assert f.read() == '{"trip_id": "4", "fare": "6.0"}'
 
 
 def test_overwrite_partitions_touches_only_changed(spark, tmp_path):

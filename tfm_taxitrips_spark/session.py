@@ -16,14 +16,35 @@ default. Here the session is built once with the settings that matter at
 - **shuffle.partitions sized from the env** (``SPARK_GRAFT_CPUS``): on the
   test harness this is the core count; on a real cluster you would size it
   to ~2-3× total executor cores and let AQE coalesce down.
+- **Class-data sharing for the driver JVM**: a new driver JVM maps the
+  classes of Spark's jars, already parsed and verified, from a JDK 17
+  dynamic archive that the first JVM records as it exits (see
+  ``_class_data_sharing``).
 """
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
 import os
+import re
+import shutil
 import tempfile
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+# The driver JVM's class-data-sharing cache: per JDK and jar set, one
+# published archive (``<key>.jsa``), at most one recording in progress
+# (``<key>.jsa.<pid>``, claimed by ``<key>.jsa.lock``), the empty conf
+# directory a CDS launch puts on the class path, and the JVMs' cds log.
+CDS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cds-cache")
+_JAVA_OPTIONS = "spark.driver.extraJavaOptions"
+_DYNAMIC_ARCHIVE_MAGIC = (0xF00BABA8).to_bytes(4, "little")
+# each of these puts something on the driver's class path that an archive
+# cannot vouch for, or that CDS refuses (a non-empty directory)
+_CLASS_PATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH", "SPARK_PREPEND_CLASSES")
 
 
 def default_parallelism() -> int:
@@ -105,8 +126,160 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for key, value in (extra_conf or {}).items():
-        builder = builder.config(key, value)
-    spark = builder.getOrCreate()
+    conf = dict(extra_conf or {})
+    with _class_data_sharing(conf):
+        for key, value in conf.items():
+            builder = builder.config(key, value)
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _cds_key(conf: dict[str, str]) -> str | None:
+    """Fingerprint of the JDK and of the jar listing (names, sizes,
+    mtimes) a new driver JVM would load, or None when ``getOrCreate``
+    launches no JVM or the launch is not CDS-safe: Linux, JDK 17 or later
+    with its base archive, a conf dir holding only ``*.template`` files,
+    nothing else added to the class path, and a writable cache whose
+    conf dir is empty."""
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return None
+    submit_args = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
+    if (any(os.environ.get(v) for v in _CLASS_PATH_ENV)
+            or "spark.driver.extraClassPath" in conf
+            or re.search(r"driver-class-path|extraClassPath", submit_args)
+            or re.search(r"Xshare|SharedArchiveFile|ArchiveClassesAtExit", conf.get(_JAVA_OPTIONS, ""))
+            # the paths go into space-split java options and -Xlog's ':'-split syntax
+            or not re.fullmatch(r"[\w./+-]+", CDS_DIR)):
+        return None
+    spark_home = _find_spark_home()
+    java = (os.path.join(os.environ["JAVA_HOME"], "bin", "java") if os.environ.get("JAVA_HOME")
+            else shutil.which("java"))  # the JVM bin/spark-class runs
+    if java is None:
+        return None
+    jdk = os.path.dirname(os.path.dirname(os.path.realpath(java)))
+    jars = os.path.join(spark_home, "jars")
+    try:
+        conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+        if not all(name.endswith(".template") for name in os.listdir(conf_dir)):
+            return None
+        with open(os.path.join(jdk, "release")) as f:
+            version = re.search(r'^JAVA_VERSION="(\d+)', f.read(), re.M)
+        if version is None or int(version.group(1)) < 17:
+            return None
+        os.makedirs(os.path.join(CDS_DIR, "conf"), exist_ok=True)
+        if os.listdir(os.path.join(CDS_DIR, "conf")) or not os.access(CDS_DIR, os.W_OK):
+            return None
+        digest = hashlib.sha256()
+        for path in [os.path.join(jdk, "lib", "server", name) for name in ("libjvm.so", "classes.jsa")] + [
+                os.path.join(jars, name) for name in sorted(os.listdir(jars))]:
+            st = os.stat(path)
+            digest.update(f"{path}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    except OSError:
+        return None
+    return digest.hexdigest()[:16]
+
+
+def _is_archive(path: str) -> bool:
+    """Whether ``path`` starts like a dynamic CDS archive. The JVM writes
+    the header last, so a recording cut short does not."""
+    try:
+        with open(path, "rb") as f:
+            return f.read(4) == _DYNAMIC_ARCHIVE_MAGIC
+    except OSError:
+        return False
+
+
+def _running(pid: int) -> bool:
+    """Whether process ``pid`` still runs; a zombie has finished."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()[0] != "Z"
+    except (OSError, IndexError):
+        return False
+
+
+def _publish(archive: str) -> None:
+    """Once the recording JVM named in ``archive``'s lock has exited,
+    move its archive to ``archive`` with one atomic rename, or drop it
+    when it was cut short, and release the lock. A JVM handed a partly
+    written archive dies of SIGBUS while mapping it."""
+    lock = archive + ".lock"
+    try:
+        with open(lock) as f:
+            pid, recording = f.read().split()
+        if _running(int(pid)):
+            return
+    except (OSError, ValueError):  # no recorder, or its lock is being written
+        return
+    if _is_archive(recording):
+        os.replace(recording, archive)
+    else:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(recording)
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(lock)
+
+
+def _claim(lock: str, pid: int, recording: str) -> None:
+    """Write ``lock``'s content in one rename, so a reader sees it whole."""
+    with open(f"{lock}.{os.getpid()}", "w") as f:
+        f.write(f"{pid} {recording}")
+    os.replace(f.name, lock)
+
+
+@contextlib.contextmanager
+def _class_data_sharing(conf: dict[str, str]):
+    """Launch a new driver JVM with JDK 17's dynamic class-data sharing.
+
+    With a published archive for this JDK and jar set, the JVM maps it
+    (``-XX:SharedArchiveFile``). Without one, the JVM records one as it
+    exits (``-XX:ArchiveClassesAtExit``) to a private path, claimed by an
+    ``O_EXCL`` lock that holds the recording JVM's pid; a later launch
+    publishes it once that JVM is gone. The flags are appended to the
+    caller's ``spark.driver.extraJavaOptions``, ``cds`` logging goes to a
+    file, and for this launch only ``SPARK_CONF_DIR`` is an empty
+    directory (CDS refuses a non-empty directory on the class path).
+
+    A launch that is not CDS-safe, a recording in progress or an
+    unreadable archive builds the session as without CDS, with no option
+    or environment variable added."""
+    key = _cds_key(conf)
+    if key is None:
+        yield
+        return
+    archive = os.path.join(CDS_DIR, f"{key}.jsa")
+    lock = archive + ".lock"
+    _publish(archive)
+    recording = None
+    if os.path.exists(archive):
+        if not _is_archive(archive):
+            yield
+            return
+        flag = f"-XX:SharedArchiveFile={archive}"
+    else:
+        try:
+            os.close(os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+        except FileExistsError:  # another JVM is recording
+            yield
+            return
+        recording = f"{archive}.{os.getpid()}"
+        _claim(lock, os.getpid(), recording)
+        flag = f"-XX:ArchiveClassesAtExit={recording}"
+    conf[_JAVA_OPTIONS] = " ".join(filter(None, (
+        conf.get(_JAVA_OPTIONS), flag, f"-Xlog:cds*=off -Xlog:cds*=warning:file={CDS_DIR}/cds.log")))
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = os.path.join(CDS_DIR, "conf")
+    try:
+        yield
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+        if recording:
+            gateway = SparkContext._gateway
+            if gateway is None:  # no JVM was launched: nothing will record
+                os.remove(lock)
+            else:  # the JVM records as it exits, even after a failed build
+                _claim(lock, gateway.proc.pid, recording)

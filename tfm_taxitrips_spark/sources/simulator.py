@@ -33,9 +33,13 @@ def replay_rows_as_json(
         nonlocal batch, n
         if not batch:
             return
-        path = os.path.join(out_dir, f"{prefix}-{n:05d}.json")
-        with open(path, "w") as f:
+        name = f"{prefix}-{n:05d}.json"
+        path = os.path.join(out_dir, name)
+        # written under a hidden name, then renamed into place: a polling
+        # file source skips hidden files, so it never lists a partial batch
+        with open(os.path.join(out_dir, "." + name), "w") as f:
             f.write("\n".join(batch))
+        os.replace(f.name, path)
         paths.append(path)
         batch = []
         n += 1
